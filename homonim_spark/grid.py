@@ -70,10 +70,6 @@ def cell_col(cid):
     return int(v) if np.isscalar(cid) else v
 
 
-def cell_to_rc(cid) -> Tuple[int, int]:
-    return cell_row(cid), cell_col(cid)
-
-
 def neighbor(cid: int, drow: int, dcol: int) -> int:
     """Cell id of the (drow, dcol) grid neighbor at the same resolution."""
     return cell_id(cell_res(cid), cell_row(cid) + drow, cell_col(cid) + dcol)
@@ -115,21 +111,6 @@ def children(cid: int) -> List[int]:
     return [
         cell_id(res + 1, 2 * r + dr, 2 * c + dc) for dr in (0, 1) for dc in (0, 1)
     ]
-
-
-def xy_to_cell(x, y, res: int):
-    """Cell containing planar point(s) (x, y). Row axis points down (south),
-    matching raster row order; vectorized."""
-    s = cell_size(res)
-    col = np.floor(np.asarray(x, dtype=np.float64) / s).astype(np.int64)
-    row = np.floor(np.asarray(y, dtype=np.float64) / s).astype(np.int64)
-    out = cell_id(res, row, col)
-    return out
-
-
-def cell_center_xy(cid) -> Tuple[float, float]:
-    s = cell_size(int(cell_res(cid)))
-    return (cell_col(cid) + 0.5) * s, (cell_row(cid) + 0.5) * s
 
 
 # ---------------------------------------------------------------------------

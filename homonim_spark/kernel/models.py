@@ -6,7 +6,9 @@ Numerical semantics replicate the reference's ``KernelModel``
 gain-blk-offset, R² thresholding + offset inpainting + gain re-solve).
 All functions are plain numpy over 2-D float32 arrays with NaN nodata and
 run inside Arrow-batched pandas UDFs — the distributed layer
-(halo exchange, join, regroup) lives in ``homonim_spark.operators.fuse``.
+(halo exchange, join, regroup) lives in ``homonim_spark.operators.fuse``,
+whose group stage hands each assembled chunk canvas to
+:func:`ref_space_chunk` or :func:`src_space_chunk`.
 """
 
 from __future__ import annotations
@@ -373,23 +375,115 @@ def fit_and_apply_ref_space(
     return param, corr
 
 
-def fit_and_apply_src_space(
+def _interior(arr: NDArray, oh: int, ow: int, scale: int) -> NDArray:
+    """Crop a halo ring of ``oh``×``ow`` coarse-grid pixels (``scale`` grid
+    pixels each) off the last two axes of a chunk canvas."""
+    h, w = arr.shape[-2:]
+    return arr[..., oh * scale : h - oh * scale, ow * scale : w - ow * scale]
+
+
+def ref_space_chunk(
     src: NDArray,
     ref: NDArray,
     params: KernelModelParams,
-    factor: Tuple[int, int],
-) -> Tuple[NDArray, NDArray]:
-    """SrcSpaceModel fit+apply (reference ``kernel_model.py:506-535``):
-    upsample ref to the src grid, fit and apply there.
-    ``factor`` = src pixels per ref pixel per dim."""
-    ref_us = ops.upsample_bilinear(ref, factor)
-    param = fit_model(src, ref_us, params)
-    if params.mask_partial:
-        out_mask = full_coverage_mask(
-            ~np.isnan(ref_us), ~np.isnan(param[0]), (1, 1), params.kernel_shape
-        )
-        param[:, ~out_mask] = np.nan
+    factor: int,
+    src_finer: bool = True,
+) -> Optional[Tuple[NDArray, NDArray]]:
+    """RefSpaceModel fit+apply for one chunk canvas (reference
+    ``kernel_model.py:466-503``).
+
+    ``src``/``ref`` are the assembled canvases: the chunk interior plus a
+    halo ring of ``overlap_for_kernel(params.kernel_shape)`` coarse-grid
+    pixels on every side, NaN where no tile lies.  ``factor`` = fine pixels
+    per coarse pixel per dim; ``src_finer`` says which role is the fine one.
+    The model is fit on the whole ref-grid canvas and the params are cropped
+    to the interior (the chunk's out-block, ``raster_pair.py:389-427``), so
+    a chunk equals the same window of the whole image.
+
+    Returns ``(params on the ref grid, corrected src)`` for the interior, or
+    None when src and ref share no valid pixel.
+    """
+    oh, ow = overlap_for_kernel(params.kernel_shape)
+    f = (factor, factor)
+    s_sc, r_sc = (factor, 1) if src_finer else (1, factor)
+    # src finer → block-mean downsample src (the recommended combo); src
+    # coarser → bilinear-upsample src onto the finer ref grid (the
+    # reference's warned-but-allowed combination)
+    src_proc = ops.downsample_average(src, f) if src_finer else ops.upsample_bilinear(src, f)
+    if not _combined_mask(src_proc, ref).any():
+        return None
+    param = fit_model(src_proc, ref, params)
+    pc = _interior(param, oh, ow, r_sc)
+    src_int = _interior(src, oh, ow, s_sc)
+    if src_finer:
+        # params ref(coarse) → src(fine): the reference's smooth param
+        # upsampling (kernel_model.py:101).  Interpolation reads proc px
+        # beyond the interior (1 for bilinear; KernelModelParams enforces
+        # enough halo for cubic/lanczos), so upsample the FULL halo canvas
+        # and crop in fine coordinates — keeps chunked == whole-image
+        up = ops.param_upsampler(params.param_interp)
+        param_us = np.stack([_interior(up(p, f), oh, ow, factor) for p in param[:2]])
     else:
-        param[:, np.isnan(src)] = np.nan
-    corr = apply_model(src, param)
-    return param, corr
+        # params ref(fine) → src(coarse): block-mean downsample (the
+        # reference's proc→src 'downsampling=average' default)
+        param_us = np.stack([ops.downsample_average(p, f) for p in pc[:2]])
+    if params.mask_partial:
+        # strict coverage (kernel_model.py:375-409) on the ref grid.  Halo
+        # radius == erosion radius (ceil(k/2) == k//2+1 for odd k), so the
+        # interior crop is exact
+        src_valid = (~np.isnan(src)).astype(np.float32)
+        if src_finer:
+            full_cov = full_coverage_mask(src_valid, ~np.isnan(param[0]), f,
+                                          params.kernel_shape)
+        else:
+            full_cov = full_coverage_mask(ops.upsample_nearest(src_valid, f),
+                                          ~np.isnan(param[0]), (1, 1), params.kernel_shape)
+        fc = _interior(full_cov, oh, ow, r_sc).astype(np.float32)
+        cov_us = ops.upsample_nearest(fc, f) >= 0.5 if src_finer else ops.block_mean(fc, f) >= 1
+        param_us[:, ~cov_us] = np.nan
+    else:
+        param_us[:, np.isnan(src_int)] = np.nan
+    return pc, apply_model(src_int, param_us)
+
+
+def src_space_chunk(
+    src: NDArray,
+    ref: NDArray,
+    params: KernelModelParams,
+    factor: int,
+    src_finer: bool = True,
+) -> Optional[Tuple[NDArray, NDArray]]:
+    """SrcSpaceModel fit+apply for one chunk canvas (reference
+    ``kernel_model.py:506-535``): resample ref to the src grid, fit and
+    apply there.  Canvases and arguments as :func:`ref_space_chunk`.
+
+    Returns ``(params on the src grid, corrected src)`` for the interior,
+    or None when src and ref share no valid pixel.
+    """
+    oh, ow = overlap_for_kernel(params.kernel_shape)
+    f = (factor, factor)
+    s_sc = factor if src_finer else 1
+    # src finer → bilinear-upsample ref; src coarser (the auto resolution
+    # when the source is the lower-res image, raster_pair.py:193-224) →
+    # block-mean downsample ref
+    ref_rs = ops.upsample_bilinear(ref, f) if src_finer else ops.downsample_average(ref, f)
+    if not _combined_mask(src, ref_rs).any():
+        return None
+    param = fit_model(src, ref_rs, params)
+    pc = _interior(param, oh, ow, s_sc)
+    src_int = _interior(src, oh, ow, s_sc)
+    param_us = pc[:2].copy()
+    if params.mask_partial:
+        # coverage = ref mask resampled to the src grid
+        # (kernel_model.py:526-533)
+        ref_valid = (~np.isnan(ref)).astype(np.float32)
+        if src_finer:
+            full_cov = full_coverage_mask(ops.upsample_nearest(ref_valid, f),
+                                          ~np.isnan(param[0]), (1, 1), params.kernel_shape)
+        else:
+            full_cov = full_coverage_mask(ref_valid, ~np.isnan(param[0]), f,
+                                          params.kernel_shape)
+        param_us[:, ~_interior(full_cov, oh, ow, s_sc)] = np.nan
+    else:
+        param_us[:, np.isnan(src_int)] = np.nan
+    return pc, apply_model(src_int, param_us)

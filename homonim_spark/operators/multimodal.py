@@ -156,10 +156,3 @@ def resize_media(media: DataFrame, out_h: int, out_w: int, codec: str = "raw-f32
             yield pd.DataFrame(rows, columns=["media_ref", "h", "w", "data"])
 
     return media.select("media_ref", "h", "w", "data").mapInPandas(resize, schema=schema)
-
-
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Deterministic frame sampling for video-like sequences: keep payloads
-    whose frame index ≡ 0 (mod every_n). Pure column pruning+filter — the
-    scan never reads dropped payload bytes (parquet row-group pruning)."""
-    return media.filter(F.pmod(F.col("frame_idx"), F.lit(every_n)) == 0)

@@ -75,13 +75,6 @@ def skew_report(df: DataFrame, keys: List[str], top: int = 10) -> DataFrame:
     )
 
 
-def suggest_salt(df: DataFrame, keys: List[str], target_rows_per_task: int = 100_000) -> int:
-    """Salting factor from measured skew: split the hottest key into pieces
-    of ~``target_rows_per_task`` rows (1 = no salting needed)."""
-    row = skew_report(df, keys).collect()[0]
-    return max(1, int(-(-row["max_rows"] // target_rows_per_task)))
-
-
 # ---------------------------------------------------------------------------
 # point-in-polygon tile↔footprint assignment (J6)
 # ---------------------------------------------------------------------------

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: small deterministic English stopword list for the language-ID heuristic
+#: small deterministic English stopword list for the stopword-ratio and
+#: language-ID columns of :func:`text_profile`
 EN_STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",
     "for", "on", "with", "as", "at", "by", "be",
@@ -29,10 +30,6 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def token_count(col: Column) -> Column:
-    return F.when(F.length(F.trim(col)) == 0, F.lit(0)).otherwise(F.size(tokens(col)))
-
-
 def bpe_ish_token_count(col: Column) -> Column:
     """A BPE-like proxy: count of word/number/punctuation units from a
     regex segmentation (deterministic, JVM-side)."""
@@ -44,44 +41,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     words = F.size(F.split(F.trim(col), r"[^\p{Alnum}]+"))
     chars = F.length(F.regexp_replace(col, r"\s+", ""))
     return (words + F.floor(chars / F.lit(16))).cast("long")
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = tokens(F.lower(col))
-    hits = F.size(F.filter(toks, lambda t: t.isin(EN_STOPWORDS)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def punct_ratio(col: Column) -> Column:
-    total = F.greatest(F.length(col), F.lit(1))
-    punct = F.length(col) - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
-    return punct / total
-
-
-def mean_word_len(col: Column) -> Column:
-    toks = tokens(col)
-    return (
-        F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t))
-        / F.greatest(F.size(toks), F.lit(1))
-    )
-
-
-def quality_score(col: Column) -> Column:
-    """Composite document-quality heuristic: rewards reasonable length and
-    stopword presence, penalizes punctuation soup. All built-ins."""
-    llen = F.log1p(F.length(col))
-    return (
-        F.lit(0.4) * F.least(llen / F.lit(8.0), F.lit(1.0))
-        + F.lit(0.4) * F.least(stopword_ratio(col) * 4, F.lit(1.0))
-        + F.lit(0.2) * (F.lit(1.0) - F.least(punct_ratio(col) * 5, F.lit(1.0)))
-    )
-
-
-def lang_id(col: Column) -> Column:
-    """n-gram/stopword language-ID heuristic: 'en' when English stopwords
-    make up a meaningful share of tokens, else 'unk'. Deterministic,
-    SQL-expressible."""
-    return F.when(stopword_ratio(col) >= 0.05, F.lit("en")).otherwise(F.lit("unk"))
 
 
 def fingerprint(col: Column) -> Column:

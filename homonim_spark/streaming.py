@@ -31,25 +31,6 @@ def read_document_stream(spark: SparkSession, path: str,
     )
 
 
-def incremental_span_counts(
-    docs_stream: DataFrame, out_path: str, checkpoint: str
-) -> StreamingQuery:
-    """Per-document span-kind counts, incrementally: explode is stateless, so
-    this runs append-mode with exactly-once file-sink semantics."""
-    counts = (
-        docs_stream.select("doc_id", F.explode("spans").alias("span"))
-        .groupBy("doc_id", F.col("span.kind").alias("kind"))
-        .agg(F.count("*").alias("n_spans"))
-    )
-    return (
-        counts.writeStream.outputMode("complete")
-        .format("memory").queryName("span_counts")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def incremental_media_refs(
     docs_stream: DataFrame, out_path: str, checkpoint: str
 ) -> StreamingQuery:

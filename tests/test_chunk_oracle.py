@@ -21,14 +21,14 @@ from homonim_spark.operators import fuse as fuse_ops
 from homonim_spark.tiles import decode_tile
 
 
-def test_gain_blk_offset_chunk_oracle(spark):
+def _check_gain_blk_offset_chunk_oracle(spark, mask_partial):
     spec = datagen.RasterFixtureSpec(pair_id="co", cells=(6, 6), tile=8, factor=2,
                                      true_gain=1.5, true_offset=4.0)
     docs_pdf, tiles_pdf = datagen.build_pair_tables(spec)
     docs, tiles = datagen.to_spark(spark, docs_pdf, tiles_pdf)
     K, kernel = 4, (5, 5)
     fused = fuse_ops.fuse(docs, tiles, model="gain-blk-offset", kernel_shape=kernel,
-                          chunk=K).toPandas()
+                          chunk=K, mask_partial=mask_partial).toPandas()
     assert len(fused) == 36
 
     ref_img, src_img = datagen.make_pair_arrays(spec, 0)
@@ -61,6 +61,23 @@ def test_gain_blk_offset_chunk_oracle(spark):
                 continue
             param = fit_model(src_proc, ref_c, params)
             pc = param[:, oh:oh + span, ow:ow + span]
+            # apply: bilinear param upsampling over the whole halo canvas,
+            # cropped to the interior; mask_partial keeps only proc pixels
+            # fully covered by src, eroded by a (k+2) rect
+            fsl = (slice(oh * f, (oh + span) * f), slice(ow * f, (ow + span) * f))
+            src_int = src_c[fsl]
+            param_us = np.stack([ops.upsample_bilinear_masked(param[i], (f, f))[fsl]
+                                 for i in (0, 1)])
+            if mask_partial:
+                cov = ops.block_mean((~np.isnan(src_c)).astype(np.float32), (f, f))
+                full = ops.erode_rect(((cov >= 1) & ~np.isnan(param[0])).astype(np.uint8),
+                                      (kernel[0] + 2, kernel[1] + 2)).astype(bool)
+                keep = ops.upsample_nearest(
+                    full[oh:oh + span, ow:ow + span].astype(np.float32), (f, f)) >= 0.5
+                param_us[:, ~keep] = np.nan
+            else:
+                param_us[:, np.isnan(src_int)] = np.nan
+            corr = apply_model(src_int, param_us)
             for lr in range(K):
                 for lc in range(K):
                     cr, cc = Rc * K + lr, Cc * K + lc
@@ -76,6 +93,20 @@ def test_gain_blk_offset_chunk_oracle(spark):
                     want_off = pc[1, lr * T:(lr + 1) * T, lc * T:(lc + 1) * T]
                     np.testing.assert_array_equal(
                         decode_tile(row.offset, T, T).tobytes(), want_off.tobytes())
+                    want_corr = corr[lr * T * f:(lr + 1) * T * f, lc * T * f:(lc + 1) * T * f]
+                    np.testing.assert_array_equal(
+                        decode_tile(row.corr, T * f, T * f).tobytes(), want_corr.tobytes(),
+                        err_msg=f"corr mismatch at cell ({cr},{cc})")
+
+
+def test_gain_blk_offset_chunk_oracle(spark):
+    _check_gain_blk_offset_chunk_oracle(spark, mask_partial=False)
+
+
+def test_gain_blk_offset_chunk_oracle_mask_partial(spark):
+    """mask_partial changes only the corrected pixels (strict coverage at
+    the image edges), so this case pins corr against the oracle."""
+    _check_gain_blk_offset_chunk_oracle(spark, mask_partial=True)
 
 
 def _formatted_plan(df):

@@ -18,6 +18,9 @@ from homonim_spark.kernel.models import (
     apply_model,
     fit_and_apply_ref_space,
     fit_model,
+    overlap_for_kernel,
+    ref_space_chunk,
+    src_space_chunk,
 )
 
 MODELS = [Model.gain, Model.gain_blk_offset, Model.gain_offset]
@@ -196,3 +199,60 @@ def test_partial_mask_erodes_edges():
     full = np.count_nonzero(~np.isnan(src))
     kept = np.count_nonzero(~np.isnan(corr))
     assert 0 < kept < full  # strictly smaller output footprint
+
+
+def _chunk_pair(factor):
+    """A coarse ref image and a ``factor``-times finer src with a NaN
+    border and a NaN hole, related by a spatially varying gain/offset."""
+    ref = gradient(20, 20, border=1)
+    src = np.kron(gradient(20, 20, border=0), np.ones((factor, factor), dtype=np.float32))
+    src = (0.5 * src + 3.0 + np.arange(src.shape[1], dtype=np.float32) / 7).astype(np.float32)
+    src[:factor] = np.nan
+    src[:, -factor:] = np.nan
+    src[9 * factor:11 * factor + 1, 5 * factor:6 * factor] = np.nan
+    return src, ref
+
+
+def _in_canvas(img, oh, ow, scale):
+    """Place ``img`` inside a NaN ring of ``oh``×``ow`` coarse pixels."""
+    h, w = img.shape
+    canvas = np.full((h + 2 * oh * scale, w + 2 * ow * scale), np.nan, dtype=np.float32)
+    canvas[oh * scale : oh * scale + h, ow * scale : ow * scale + w] = img
+    return canvas
+
+
+@pytest.mark.parametrize("mask_partial", [False, True])
+@pytest.mark.parametrize("model", MODELS)
+def test_ref_space_chunk_matches_whole_image(model, mask_partial):
+    """A chunk whose halo ring holds no data is the whole image: the
+    Spark-free chunk kernel equals the whole-image oracle on the bare image."""
+    src, ref = _chunk_pair(2)
+    params = KernelModelParams(model=model, kernel_shape=(5, 5), find_r2=True,
+                               mask_partial=mask_partial)
+    oh, ow = overlap_for_kernel(params.kernel_shape)
+    got_param, got_corr = ref_space_chunk(_in_canvas(src, oh, ow, 2),
+                                          _in_canvas(ref, oh, ow, 1), params, 2)
+    want_param, want_corr = fit_and_apply_ref_space(src, ref, params, (2, 2))
+    # bit-exact: the ring adds only exact zeros to the kernel sums, and the
+    # image's own NaN edge already keeps the param upsampler off its clamp
+    assert got_param.tobytes() == want_param.tobytes()
+    assert got_corr.tobytes() == want_corr.tobytes()
+    # src and ref sharing no valid pixel → nothing to emit
+    assert ref_space_chunk(np.full_like(src, np.nan), ref, params, 2) is None
+
+
+@pytest.mark.parametrize("mask_partial", [False, True])
+@pytest.mark.parametrize("model", MODELS)
+def test_src_space_chunk_equals_ref_space_at_factor_1(model, mask_partial):
+    """On aligned grids the two processing spaces are the same computation:
+    bit-identical params and corrected pixels."""
+    src, ref = _chunk_pair(1)
+    params = KernelModelParams(model=model, kernel_shape=(3, 3), find_r2=True,
+                               mask_partial=mask_partial)
+    oh, ow = overlap_for_kernel(params.kernel_shape)
+    src_c, ref_c = _in_canvas(src, oh, ow, 1), _in_canvas(ref, oh, ow, 1)
+    a = ref_space_chunk(src_c, ref_c, params, 1)
+    b = src_space_chunk(src_c, ref_c, params, 1)
+    assert np.count_nonzero(~np.isnan(a[1])) > 0
+    for x, y in zip(a, b):
+        assert x.shape == y.shape and x.tobytes() == y.tobytes()

@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 from homonim_spark import datagen, grid
-from homonim_spark.enums import ConfigError, Model, ProcCrs
+from homonim_spark.enums import Model, ProcCrs
 from homonim_spark.kernel import ops
 from homonim_spark.kernel.models import KernelModelParams, apply_model, fit_model
 from homonim_spark.operators import fuse as fuse_ops
@@ -114,13 +114,6 @@ def test_src_coarser_forced_ref_space_runs(spark, swapped):
     # corrected tiles stay on the src (coarse) grid
     corr = _assemble(fused, "corr", SPEC.tile)
     assert np.isfinite(corr).sum() > 0
-
-
-def test_src_coarser_strips_mode_rejected(spark, swapped):
-    docs, tiles = swapped
-    with pytest.raises(ConfigError, match="routed"):
-        fuse_ops.fuse(docs, tiles, model=Model.gain, kernel_shape=(5, 5),
-                      proc_crs="auto", halo_mode="strips")
 
 
 def test_non_integer_resolution_ratio_rejected(spark):
