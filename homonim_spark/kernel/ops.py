@@ -180,32 +180,36 @@ def upsample_bilinear(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
     return out
 
 
-def upsample_bilinear_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """NaN-safe integer-factor bilinear upsample (normalized convolution).
-
-    Plain bilinear propagates NaN into every output pixel whose 2×2 support
-    touches nodata — at mask borders this eats a ring of valid output.  Here
-    NaN inputs get zero weight instead (interpolate value·mask / mask), and
-    output validity follows the *nearest* input pixel, matching how the
-    reference masks reprojected parameters by the proc-grid mask
-    (``/root/reference/homonim/kernel_model.py:138-140,396-409``).
-    """
+def _upsample_masked(upsample, arr: np.ndarray, factor: Tuple[int, int],
+                     guard: float) -> np.ndarray:
+    """NaN-safe ``upsample`` by normalized convolution: NaN inputs get zero
+    weight (interpolate value·mask / mask, NaN where ``|mask| ≤ guard``),
+    and output validity follows the *nearest* input pixel, matching how
+    the reference masks reprojected parameters by the proc-grid mask
+    (``/root/reference/homonim/kernel_model.py:138-140,396-409``)."""
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
     valid = ~np.isnan(arr)
     if valid.all():
         # fully-valid fast path (the common interior-chunk case): one
-        # bilinear pass instead of value+weight passes + nearest mask
-        return upsample_bilinear(arr, factor)
+        # pass instead of value+weight passes + nearest mask
+        return upsample(arr, factor)
     v = np.where(valid, arr, np.float32(0.0)).astype(np.float32)
-    num = upsample_bilinear(v, factor)
-    den = upsample_bilinear(valid.astype(np.float32), factor)
+    num = upsample(v, factor)
+    den = upsample(valid.astype(np.float32), factor)
     out = np.full(num.shape, np.nan, dtype=np.float32)
-    np.divide(num, den, out=out, where=den > np.float32(1e-6))
+    np.divide(num, den, out=out, where=np.abs(den) > np.float32(guard))
     nv = upsample_nearest(valid.astype(np.float32), factor) >= 0.5
     out[~nv] = np.nan
     return out
+
+
+def upsample_bilinear_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
+    """NaN-safe integer-factor bilinear upsample (:func:`_upsample_masked`).
+    Plain bilinear propagates NaN into every output pixel whose 2×2 support
+    touches nodata — at mask borders this eats a ring of valid output."""
+    return _upsample_masked(upsample_bilinear, arr, factor, 1e-6)
 
 
 def _shift_rows(a: np.ndarray, s: int) -> np.ndarray:
@@ -247,119 +251,60 @@ def _lanczos_weights(t: float, a: int = 3):
     return w.astype(np.float32)
 
 
-def upsample_lanczos(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """Integer-factor separable Lanczos-3 upsample on pixel-center
-    alignment, edge-replicate borders — the analogue of the reference's
-    ``Resampling.lanczos`` option (``raster_array.py:526-578`` exposes the
-    full rasterio resampling enum; the engine's model paths default to
-    cubic/average like the reference defaults, lanczos is the sharpest
-    opt-in).  Same phase-decomposition strategy as :func:`upsample_cubic`:
-    weights repeat with period f, so each pass is 6 clamped shifts per
-    phase."""
+def _upsample_taps(arr: np.ndarray, factor: Tuple[int, int], weights,
+                   n_taps: int) -> np.ndarray:
+    """Integer-factor separable upsample on pixel-center alignment with
+    edge-replicate borders, from the ``n_taps``-tap weight function
+    ``weights(t)`` at fraction ``t``.  Phase decomposition as in
+    :func:`upsample_bilinear`: ``n_taps`` clamped shifts per phase."""
     fh, fw = int(factor[0]), int(factor[1])
     if fh == 1 and fw == 1:
         return arr.astype(np.float32, copy=True)
     h, w = arr.shape
     a = np.ascontiguousarray(arr, dtype=np.float32)
     out = np.empty((h * fh, w * fw), dtype=np.float32)
+    lo = 1 - n_taps // 2        # first tap's offset from the floor sample
 
     def phase(f: int, i: int):
         o = (i + 0.5) / f - 0.5
         b = int(np.floor(o))
         return b, o - b
 
-    row_cache = {}
     for i in range(fh):
         br, ty = phase(fh, i)
-        wy = _lanczos_weights(ty)
-        ri = row_cache.get((br, round(ty, 12)))
-        if ri is None:
-            ri = sum(wy[m] * _shift_rows(a, br - 2 + m) for m in range(6))
-            row_cache[(br, round(ty, 12))] = ri
+        wy = weights(ty)
+        ri = sum(wy[m] * _shift_rows(a, br + lo + m) for m in range(n_taps))
         for j in range(fw):
             bc, tx = phase(fw, j)
-            wx = _lanczos_weights(tx)
+            wx = weights(tx)
             out[i::fh, j::fw] = sum(
-                wx[m] * _shift_cols(ri, bc - 2 + m) for m in range(6))
-    return out
-
-
-def upsample_lanczos_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """NaN-safe Lanczos-3 upsample (normalized convolution +
-    nearest-validity), mirroring :func:`upsample_cubic_masked`; lanczos
-    negative lobes are larger than cubic's, so the same enlarged
-    weight-sum guard applies."""
-    fh, fw = int(factor[0]), int(factor[1])
-    if fh == 1 and fw == 1:
-        return arr.astype(np.float32, copy=True)
-    valid = ~np.isnan(arr)
-    if valid.all():
-        return upsample_lanczos(arr, factor)
-    v = np.where(valid, arr, np.float32(0.0)).astype(np.float32)
-    num = upsample_lanczos(v, factor)
-    den = upsample_lanczos(valid.astype(np.float32), factor)
-    out = np.full(num.shape, np.nan, dtype=np.float32)
-    np.divide(num, den, out=out, where=np.abs(den) > np.float32(1e-3))
-    nv = upsample_nearest(valid.astype(np.float32), factor) >= 0.5
-    out[~nv] = np.nan
+                wx[m] * _shift_cols(ri, bc + lo + m) for m in range(n_taps))
     return out
 
 
 def upsample_cubic(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """Integer-factor separable cubic (Catmull-Rom) upsample on pixel-center
-    alignment, edge-replicate borders — the engine's smooth-interpolation
-    analogue of the reference's default ``Resampling.cubic_spline``
-    parameter upsampling (``/root/reference/homonim/kernel_model.py:101``).
-    Same phase-decomposition strategy as :func:`upsample_bilinear`:
-    weights repeat with period f, so the pass is 4 clamped shifts per phase.
-    """
-    fh, fw = int(factor[0]), int(factor[1])
-    if fh == 1 and fw == 1:
-        return arr.astype(np.float32, copy=True)
-    h, w = arr.shape
-    a = np.ascontiguousarray(arr, dtype=np.float32)
-    out = np.empty((h * fh, w * fw), dtype=np.float32)
-
-    def phase(f: int, i: int):
-        o = (i + 0.5) / f - 0.5
-        b = int(np.floor(o))
-        return b, o - b
-
-    row_cache = {}
-    for i in range(fh):
-        br, ty = phase(fh, i)
-        wy = _catmull_rom_weights(ty)
-        ri = row_cache.get((br, round(ty, 12)))
-        if ri is None:
-            ri = sum(wy[m] * _shift_rows(a, br - 1 + m) for m in range(4))
-            row_cache[(br, round(ty, 12))] = ri
-        for j in range(fw):
-            bc, tx = phase(fw, j)
-            wx = _catmull_rom_weights(tx)
-            out[i::fh, j::fw] = sum(
-                wx[m] * _shift_cols(ri, bc - 1 + m) for m in range(4))
-    return out
+    """Integer-factor separable cubic (Catmull-Rom) upsample — the engine's
+    smooth-interpolation analogue of the reference's default
+    ``Resampling.cubic_spline`` parameter upsampling
+    (``/root/reference/homonim/kernel_model.py:101``)."""
+    return _upsample_taps(arr, factor, _catmull_rom_weights, 4)
 
 
 def upsample_cubic_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
-    """NaN-safe cubic upsample (normalized convolution + nearest-validity),
-    mirroring :func:`upsample_bilinear_masked`: NaN inputs get zero weight,
-    output validity follows the nearest input pixel.  Note cubic weights are
-    signed, so the weight-sum guard is larger than bilinear's."""
-    fh, fw = int(factor[0]), int(factor[1])
-    if fh == 1 and fw == 1:
-        return arr.astype(np.float32, copy=True)
-    valid = ~np.isnan(arr)
-    if valid.all():
-        return upsample_cubic(arr, factor)
-    v = np.where(valid, arr, np.float32(0.0)).astype(np.float32)
-    num = upsample_cubic(v, factor)
-    den = upsample_cubic(valid.astype(np.float32), factor)
-    out = np.full(num.shape, np.nan, dtype=np.float32)
-    np.divide(num, den, out=out, where=np.abs(den) > np.float32(1e-3))
-    nv = upsample_nearest(valid.astype(np.float32), factor) >= 0.5
-    out[~nv] = np.nan
-    return out
+    """NaN-safe cubic upsample; signed weights need a larger guard."""
+    return _upsample_masked(upsample_cubic, arr, factor, 1e-3)
+
+
+def upsample_lanczos(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
+    """Integer-factor separable Lanczos-3 upsample — the analogue of the
+    reference's ``Resampling.lanczos`` option (``raster_array.py:526-578``);
+    the sharpest opt-in."""
+    return _upsample_taps(arr, factor, _lanczos_weights, 6)
+
+
+def upsample_lanczos_masked(arr: np.ndarray, factor: Tuple[int, int]) -> np.ndarray:
+    """NaN-safe Lanczos-3 upsample; signed weights, guard as cubic's."""
+    return _upsample_masked(upsample_lanczos, arr, factor, 1e-3)
 
 
 def param_upsampler(name: str):

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from homonim_spark import grid
-from homonim_spark.enums import ImageContentError, Model, ProcCrs
+from homonim_spark.enums import ConfigError, ImageContentError, Model, ProcCrs
 from homonim_spark.kernel.models import (
     KernelModelParams,
     overlap_for_kernel,
@@ -137,7 +137,6 @@ def infer_fuse_config(tiles: DataFrame, params: KernelModelParams,
     # raster_pair.py:254-255,364-365)
     oh, ow = overlap_for_kernel(params.kernel_shape)
     if oh > coarse_h or ow > coarse_h:
-        from homonim_spark.enums import ConfigError
         raise ConfigError(
             f"kernel {params.kernel_shape} needs a {max(oh, ow)}px halo, larger "
             f"than the {coarse_h}px tile — use larger tiles (or a coarser proc grid)"
@@ -523,11 +522,15 @@ def fuse(
         sigma_clip=sigma_clip, sigma_clip_iters=sigma_clip_iters,
         param_interp=param_interp,
     )
-    if cfg is None:
-        cfg = infer_fuse_config(tiles, params, ProcCrs(proc_crs), chunk=chunk)
     # (callers that already resolved the config — e.g. the CLI, which also
     # needs cfg for the sink scale — pass it in to avoid a second
-    # metadata-scale collect over the tile table)
+    # metadata-scale collect over the tile table; the group stage reads
+    # cfg.params, so they must be the kernel arguments given here)
+    if cfg is None:
+        cfg = infer_fuse_config(tiles, params, ProcCrs(proc_crs), chunk=chunk)
+    elif cfg.params != params:
+        raise ConfigError(f"cfg.params {cfg.params} disagree with the kernel "
+                          f"arguments {params}")
     used = referenced_tiles(documents, tiles)
     if band_map is not None:
         used = apply_band_map(used, band_map)

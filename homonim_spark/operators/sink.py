@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from homonim_spark import grid
 from homonim_spark.kernel import ops
 from homonim_spark.tiles import convert_array_dtype, decode_tile, encode_tile
+from homonim_spark.tiffio import overview_level_count  # noqa: F401 (re-export)
 
 _OUT_TILE_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType(), False),
@@ -254,19 +255,6 @@ def _coarsen_level(tiles: DataFrame, tile_px: int, value_col: str) -> DataFrame:
         coarsen, schema=_OVERVIEW_SCHEMA)
 
 
-def overview_level_count(shape: tuple, max_levels: int = 8,
-                         min_px: int = 256) -> int:
-    """The reference's overview stop rule (``fuse.py:151-165``): levels are
-    successive powers of 2, limited so the highest level keeps at least
-    ``min_px`` pixels along the shortest dimension and there are at most
-    ``max_levels`` levels."""
-    import numpy as np
-    if min(shape) < 1:
-        return 0
-    max_ovw = int(np.floor(np.log2(min(shape))))
-    return max(0, min(int(max_levels), max_ovw - int(np.log2(min_px))))
-
-
 def build_overviews(
     tiles: DataFrame, tile_px: int, value_col: str = "data",
     max_levels: int = 8, min_px: int = 256,
@@ -284,7 +272,7 @@ def build_overviews(
     # O(n_images) rows pulled plus O(n_images) rebuilt per level).  The rule
     # max(0, min(max_levels, floor(log2(min_shape)) - log2(min_px))) is
     # evaluated in exact integer math: floor(log2(n)) == length(bin(n)) - 1
-    # for n ≥ 1, so no float-log boundary drift vs the numpy driver rule.
+    # for n ≥ 1 — the same integer rule as ``overview_level_count``.
     min_shape = F.least(F.col("ch"), F.col("cw")) * F.lit(tile_px)
     max_ovw = F.length(F.bin(min_shape)) - F.lit(1)
     log2_min_px = int(np.log2(min_px))

@@ -104,6 +104,25 @@ def test_param_interp_kernel_context_validated():
     KernelModelParams(kernel_shape=(1, 1), param_interp="bilinear")
 
 
+def test_fuse_rejects_cfg_disagreeing_with_kernel_kwargs(spark):
+    """The group stage reads only ``cfg.params``: a pre-resolved config
+    whose params differ from fuse()'s kernel arguments must be rejected,
+    not silently run the config's model."""
+    from homonim_spark.enums import ConfigError, ProcCrs
+    from homonim_spark.kernel.models import KernelModelParams
+    spec = datagen.RasterFixtureSpec(pair_id="cfg", cells=(2, 2), tile=8, factor=1)
+    docs, tiles = datagen.to_spark(spark, *datagen.build_pair_tables(spec))
+    params = KernelModelParams(model="gain-offset", kernel_shape=(3, 3))
+    cfg = fuse_ops.infer_fuse_config(tiles, params, ProcCrs.auto)
+    with pytest.raises(ConfigError, match="kernel arguments"):
+        fuse_ops.fuse(docs, tiles, model="gain", kernel_shape=(3, 3), cfg=cfg)
+    with pytest.raises(ConfigError, match="kernel arguments"):
+        fuse_ops.fuse(docs, tiles, model="gain-offset", kernel_shape=(5, 5),
+                      cfg=cfg)
+    # the same kernel arguments pass
+    fuse_ops.fuse(docs, tiles, model="gain-offset", kernel_shape=(3, 3), cfg=cfg)
+
+
 # --- randomized property checks ---------------------------------------------
 
 @settings(max_examples=15, deadline=None)

@@ -2,10 +2,11 @@
 
 The reference reads LZW/PackBits/short-strip GeoTIFFs via GDAL
 (``/root/reference/homonim/raster_array.py:129-199``); the engine's pure
-python ``tiffio`` must decode the same families through BOTH the
-whole-file (``read_gtiff``) and windowed (``read_gtiff_meta`` +
-``decode_window``) paths.  The writer doubles as the fixture encoder, so
-every codec is round-trip-tested without GDAL.
+python ``tiffio`` has one read path — ``read_gtiff_meta`` +
+``decode_window``, which ``read_gtiff`` wraps for whole images — and it
+must decode the same families from a path, a URL or raw bytes.  The
+writer doubles as the fixture encoder, so every codec is round-trip-tested
+without GDAL, and every decode is checked against the writer's input.
 """
 
 from __future__ import annotations
@@ -37,10 +38,13 @@ def test_packbits_spec_vector():
     assert _packbits_decode(_packbits_encode(unpacked)) == unpacked
 
 
-@pytest.mark.parametrize("seed,n", [(0, 1), (1, 255), (2, 4096), (3, 300_000)])
+@pytest.mark.parametrize("seed,n", [(0, 1), (1, 255), (2, 4096), (3, 300_000),
+                                    (1810, 1810)])
 def test_lzw_roundtrip(seed, n):
     """Round-trip across code-width bumps (511/1023/2047) and, at 300 kB,
-    the 4094-entry table reset."""
+    the 4094-entry table reset.  (1810, 1810)'s noise ends where the
+    decoder's entry for the LAST data code widens the codes, so EOI must
+    be written at the wider width."""
     rng = np.random.default_rng(seed)
     # mix of compressible runs and noise so the table actually grows
     noise = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
@@ -123,6 +127,36 @@ def test_lzw_float_band_no_predictor(tmp_path):
                     predictor=2)
 
 
+def test_truncated_tile_raises(tmp_path):
+    """A tile whose byte count is short decodes to an error naming the
+    tile on every read path — never to rows of zeros.  (Short final STRIPS
+    stay legal: see the short-strip test above.)"""
+    import struct as _struct
+
+    from homonim_spark.tiffio import _read_ifd
+    img = np.arange(32 * 32, dtype=np.uint8).reshape(1, 32, 32)
+    path = str(tmp_path / "trunc.tif")
+    write_gtiff(path, img, tile=(16, 16), compress=None)
+    with open(path, "r+b") as f:
+        (_, ifd_off) = _struct.unpack("<HI", f.read(8)[2:])
+        tags, _ = _read_ifd(f, ifd_off, "<", False)
+        typ, cnt, raw = tags[325]                   # TileByteCounts
+        assert (typ, cnt) == (4, 4)
+        (counts_off,) = _struct.unpack("<I", raw)
+        f.seek(counts_off)
+        f.write(_struct.pack("<I", 16 * 16 - 4 * 16))   # 4 rows short
+    buf = open(path, "rb").read()
+    for src in (path, buf):
+        with pytest.raises(ValueError, match="truncated tile 0"):
+            read_gtiff(src)
+    meta = read_gtiff_meta(path)
+    with pytest.raises(ValueError, match="truncated tile 0"):
+        decode_window(path, meta, 0, 16)
+    # windows that miss the short tile still decode
+    np.testing.assert_array_equal(decode_window(path, meta, 16, 32),
+                                  img[:, 16:32])
+
+
 # ----------------------------------------------------------- GeoKey kinds
 
 def test_geokey_geographic_vs_projected(tmp_path):
@@ -138,16 +172,94 @@ def test_geokey_geographic_vs_projected(tmp_path):
         assert got.crs == f"EPSG:{epsg}"
         assert read_gtiff_meta(path).crs == f"EPSG:{epsg}"
         # raw directory audit: the right key id + model type are present
-        buf = open(path, "rb").read()
         from homonim_spark.tiffio import _read_ifd, _tag_value
-        (_, ifd_off) = _struct.unpack("<HI", buf[2:8])
-        tags, _ = _read_ifd(buf, ifd_off, "<")
-        gk = _tag_value(buf, tags[34735], "<")
+        with open(path, "rb") as f:
+            (_, ifd_off) = _struct.unpack("<HI", f.read(8)[2:])
+            tags, _ = _read_ifd(f, ifd_off, "<", False)
+            gk = _tag_value(f, tags[34735], "<", False)
         keys = {gk[4 + i * 4]: gk[7 + i * 4] for i in range(gk[3])}
         assert keys[1024] == want_model          # GTModelTypeGeoKey
         assert keys[1025] == 1                   # GTRasterTypeGeoKey
         assert keys[want_key] == epsg
         assert (2048 in keys) != (3072 in keys)  # never both/neither
+
+
+def _tiff_with_gdal_metadata(img: np.ndarray, xml: str) -> bytes:
+    """Classic II TIFF by hand: 2-band uint8 ``img`` as one uncompressed
+    chunky strip, plus a GDAL_METADATA (42112) ASCII tag — the tag the
+    writer does not emit but GDAL-produced files (the reference's
+    parameter GTiffs) carry."""
+    import struct as _struct
+
+    spp, h, w = img.shape
+    assert spp == 2 and img.dtype == np.uint8
+    xmlb = xml.encode() + b"\0"
+    n = 10
+    xml_off = 8 + 2 + 12 * n + 4
+    pix_off = xml_off + len(xmlb)
+    pix = np.moveaxis(img, 0, -1).tobytes()
+    short = lambda *v: _struct.pack("<HH", *(list(v) + [0])[:2])
+    long_ = lambda v: _struct.pack("<I", v)
+    entries = [(256, 4, 1, long_(w)), (257, 4, 1, long_(h)),
+               (258, 3, 2, short(8, 8)), (259, 3, 1, short(1)),
+               (262, 3, 1, short(1)), (273, 4, 1, long_(pix_off)),
+               (277, 3, 1, short(2)), (278, 4, 1, long_(h)),
+               (279, 4, 1, long_(len(pix))),
+               (42112, 2, len(xmlb), long_(xml_off))]
+    assert len(entries) == n
+    out = bytearray(_struct.pack("<2sHI", b"II", 42, 8))
+    out += _struct.pack("<H", n)
+    for tag, typ, cnt, val in entries:
+        out += _struct.pack("<HHI", tag, typ, cnt) + val
+    out += long_(0)
+    return bytes(out) + xmlb + pix
+
+
+def test_gdal_metadata_band_names_path_and_bytes(tmp_path):
+    """GDAL_METADATA items and per-band descriptions parse identically
+    from a path and from bytes; undescribed bands default to ``B<n>``."""
+    img = np.arange(2 * 3 * 5, dtype=np.uint8).reshape(2, 3, 5)
+    xml = ('<GDALMetadata>\n'
+           '  <Item name="FUSE_MODEL">GAIN_OFFSET</Item>\n'
+           '  <Item name="FUSE_KERNEL_SHAPE">[5 5]</Item>\n'
+           '  <Item name="DESCRIPTION" sample="0" role="description">'
+           'red_GAIN</Item>\n'
+           '</GDALMetadata>')
+    buf = _tiff_with_gdal_metadata(img, xml)
+    path = str(tmp_path / "md.tif")
+    with open(path, "wb") as f:
+        f.write(buf)
+    for src in (path, buf):
+        g = read_gtiff(src)
+        np.testing.assert_array_equal(g.data, img)
+        assert g.band_names == ["red_GAIN", "B2"]
+        assert g.metadata == {"FUSE_MODEL": "GAIN_OFFSET",
+                              "FUSE_KERNEL_SHAPE": "[5 5]"}
+        assert g.nodata is None and g.transform is None and g.crs is None
+        m = read_gtiff_meta(src)
+        assert m.band_names == g.band_names and m.metadata == g.metadata
+
+
+def test_overview_ifd_from_bytes_inherits_geo(tmp_path):
+    """An overview IFD read from bytes (the binaryFile path) presents the
+    primary IFD's nodata and CRS and a pixel-scaled transform."""
+    from homonim_spark.tiffio import build_overviews
+    img = np.full((1, 256, 192), 3, dtype=np.int16)
+    img[0, :64] = -1
+    ovs = build_overviews(img, nodata=-1, min_level_pixels=32)
+    path = str(tmp_path / "ovb.tif")
+    write_gtiff(path, img, nodata=-1, transform=(4, 0, 100, 0, -4, 900),
+                epsg=32633, tile=(32, 32), overviews=ovs)
+    buf = open(path, "rb").read()
+    assert read_gtiff(buf).n_overviews == len(ovs) == 2
+    for n, ov in enumerate(ovs, start=1):
+        g = read_gtiff(buf, ifd=n)
+        np.testing.assert_array_equal(g.data, ov)
+        assert g.n_overviews == len(ovs) - n
+        assert g.nodata == -1.0
+        assert g.crs == "EPSG:32633"
+        sx, sy = 192 / ov.shape[2], 256 / ov.shape[1]
+        assert g.transform == (4 * sx, 0, 100, 0, -4 * sy, 900)
 
 
 # ------------------------------------------- reference golden re-encoded
